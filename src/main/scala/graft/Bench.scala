@@ -1,44 +1,16 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import graft.util.Errors
+
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // comma-separated allowlist for targeted iteration (dev only; the
     // driver runs the full set)
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(',').map(_.trim).toSet)
     def included(name: String): Boolean = only.forall(_.contains(name))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Scale-adaptive post-shuffle sizing (optimization guide §2.2):
-      // with parallelismFirst (the default) AQE refuses to coalesce
-      // below the core count, so every exchange over this suite's
-      // KB-scale frames launches $cpus tasks whose scheduling dwarfs
-      // their work; `false` lets AQE size partitions by BYTES
-      // (advisoryPartitionSizeInBytes), which is exactly the behavior
-      // that scales — tiny inputs collapse to one task locally, TB
-      // inputs still fan out to thousands of partitions on a cluster.
-      // The Spark docs themselves recommend false for production.
-      // Parameterised (default unchanged) so the config pair can be
-      // A/B-measured at identical code — the round-18 verdict asked
-      // for a per-query A/B to clear its 26 suspected regressions.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "false"))
-      // let AQE re-size shuffles INSIDE cached plans too: the graph
-      // tier pins index-sized intermediates via CacheSlot, and with
-      // this off (the default) every cached subtree keeps the full
-      // static shuffle width — measured 32×-more tasks and 8× the
-      // executor time on q315/q327 for identical results
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_CACHED_PLAN_AQE", "true"))
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     // Warm EVERY query once at the smallest scale factor: plan shapes are
     // identical across SFs, so this compiles each query's generated code
     // (Janino, ~0.5-2s per distinct wholestage) without touching the
@@ -59,7 +31,10 @@ object Bench {
       df.queryExecution.toRdd.foreach(_ => ())
     SparkEntry.queries.foreach { case (name, fn) =>
       if (included(name)) {
-        try run(fn(spark, warmDir)) catch { case _: Throwable => () }
+        try run(fn(spark, warmDir)) catch {
+          case e: Throwable =>
+            System.err.println(s"warm-up $name: ${Errors.brief(e)}")
+        }
         spark.catalog.clearCache() // per-query cache()s must not accumulate
       }
     }
@@ -73,10 +48,12 @@ object Bench {
     // than its own runtime, so the min cannot escape it, while
     // pass-interleaving puts ~a full suite length between samples and a
     // transient must recur over the same region of EVERY pass to
-    // corrupt a min. All-failed reports -1.
+    // corrupt a min. A query that fails every pass reports -1 in the
+    // per-query map, counts in "n_failed"/"failed" and never in a total.
     val names = SparkEntry.queries.keys.toSeq.filter(included)
     val samples = scala.collection.mutable.Map.empty[String, List[Double]]
       .withDefaultValue(Nil)
+    val errors = scala.collection.mutable.Map.empty[String, Throwable]
     val passTotals = (1 to 3).map { _ =>
       val p0 = System.nanoTime()
       SparkEntry.queries.foreach { case (name, fn) =>
@@ -84,7 +61,7 @@ object Bench {
           val t0 = System.nanoTime()
           val ok =
             try { run(fn(spark, sfDir)); true }
-            catch { case _: Throwable => false }
+            catch { case e: Throwable => errors(name) = e; false }
           val dt = (System.nanoTime() - t0) / 1e9
           spark.catalog.clearCache()
           if (ok) samples(name) = dt :: samples(name)
@@ -92,10 +69,11 @@ object Bench {
       }
       (System.nanoTime() - p0) / 1e9
     }
-    val results = names.map { name =>
-      val dts = samples(name)
-      name -> (if (dts.nonEmpty) dts.min else -1.0)
-    }
+    val mins = names.map(name => name -> samples(name).minOption)
+    val results = mins.collect { case (name, Some(v)) => name -> v }
+    val failed = mins.collect { case (name, None) => name }
+    failed.foreach(name =>
+      System.err.println(s"$name: ${Errors.brief(errors(name))}"))
     // ms precision: full-precision doubles made the one-line JSON long
     // enough to overflow the driver's stdout-tail capture window with
     // 157 queries (BENCH_r09 recorded parsed:null) — 3 decimals is
@@ -104,11 +82,11 @@ object Bench {
     // locale, and a comma-decimal locale (de_DE, ...) would emit "1,234"
     // and make the one-line JSON unparseable
     def fmt(v: Double): String =
-      if (v < 0) "-1"
-      else String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + fmt(v) }
+      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+    def str(k: String): String = "\"" + k + "\""
+    val qs = mins.map { case (k, v) => str(k) + ":" + v.fold("-1")(fmt) }
       .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
+    val total = results.map(_._2).sum
     // pass_sec: wall-clock per pass — a pass total far above the others
     // localizes a transient to that pass without re-running anything
     val passJson = passTotals
@@ -134,14 +112,12 @@ object Bench {
     // per-family subtotals in "families"; both measured to fit the tail
     // window (~1.5 KB total). The full 333-entry map still prints on
     // the line above AND persists to the cpus-keyed file below.
-    val top20 = results.filter(_._2 >= 0).sortBy(-_._2).take(20)
-    val topJson = top20.map { case (k, v) => s"\"" + k + "\":" + fmt(v) }
+    val top20 = results.sortBy(-_._2).take(20)
+    val topJson = top20.map { case (k, v) => str(k) + ":" + fmt(v) }
       .mkString("{", ",", "}")
     val famJson = SparkEntry.families.toSeq.sortBy(_._1).map {
       case (fam, members) =>
-        val sub = results.collect {
-          case (k, v) if v >= 0 && members(k) => v }.sum
-        s"\"" + fam + "\":" + fmt(sub)
+        str(fam) + ":" + fmt(results.collect { case (k, v) if members(k) => v }.sum)
     }.mkString("{", ",", "}")
     // ALSO persist the full line to a machine-readable file: the file
     // keeps round-over-round per-query comparison independent of
@@ -151,8 +127,8 @@ object Bench {
     // round 18's 8-core scaling run clobbered the 32-core run's file,
     // destroying the primary per-query record of the driver's main run.
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-      s"bench_queries_c$cpus.json")
-    println(s"""{"metric":"total_summary","value":${fmt(total)},"unit":"sec","queries":$topJson,"families":$famJson,"sf":"$sfDir","pass_sec":$passJson,"n_queries":${results.size},"queries_file":"$outPath"}""")
+      s"bench_queries_c${GraftSession.cpus}.json")
+    println(s"""{"metric":"total_summary","value":${fmt(total)},"unit":"sec","queries":$topJson,"families":$famJson,"sf":"$sfDir","pass_sec":$passJson,"n_queries":${names.size},"n_failed":${failed.size},"failed":${failed.map(str).mkString("[", ",", "]")},"queries_file":"$outPath"}""")
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get(outPath).toAbsolutePath, line + "\n")
     catch {
@@ -160,5 +136,6 @@ object Bench {
         System.err.println(s"WARN: bench output write to $outPath failed: $e")
     }
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

@@ -38,55 +38,16 @@ final class LogCatalog(val spark: SparkSession) {
     spark.createDataFrame(spark.sparkContext.parallelize(rows.toSeq), Schemas.rawLine)
   }
 
-  /** `load_logs` (`cassandra_log_analyzer.py:724-736`): inline content
-    * under the BARE node name. Returns (line count incl. trailing empty,
-    * total node keys) — the tool's reported numbers.
-    */
-  def loadInline(nodeName: String, content: String): (Long, Int) = synchronized {
-    val lines = content.split("\n", -1).toSeq // Python str.split('\n') parity
-    storage(nodeName) = linesDf(nodeName, lines)
-    invalidate()
-    (lines.size.toLong, storage.size)
-  }
-
-  /** Load raw content under an EXPLICIT node key — the landing point
-    * for [[RemoteFetcher]] fetches (SSH-style `{node}_{type}` keys,
-    * `cassandra_log_analyzer.py:661,671`). Same `split('\n', -1)`
-    * parity as [[loadInline]].
+  /** The parity loader: `content` under the node key exactly as given
+    * — the BARE node name for `load_logs`
+    * (`cassandra_log_analyzer.py:724-736`), `{node}_{type}` for
+    * [[RemoteFetcher]] fetches (`:661,671`). Returns (line count incl.
+    * the trailing empty line of Python's `split('\n')`, total node
+    * keys) — the tools' reported numbers.
     */
   def loadContent(nodeKey: String, content: String): (Long, Int) = synchronized {
-    val lines = content.split("\n", -1).toSeq
+    val lines = content.split("\n", -1).toSeq // Python str.split('\n') parity
     storage(nodeKey) = linesDf(nodeKey, lines)
-    invalidate()
-    (lines.size.toLong, storage.size)
-  }
-
-  /** `load_logs_from_ssh`-shaped load from a (local or staged) file path,
-    * keyed `{node}_{type}` (`cassandra_log_analyzer.py:661,671`).
-    * `tailLines` mirrors the reference's remote `tail -n N` limit
-    * pushdown (`:136-137`) — only the last N lines enter the engine.
-    *
-    * Reads via `wholetext` + split so the trailing-newline empty line is
-    * preserved exactly like `cat file | split('\n')`. Parity path — for
-    * the 100 TB tier use [[loadDistributed]].
-    */
-  def loadFile(nodeName: String, logType: String, path: String,
-               tailLines: Option[Int] = None): (Long, Int) = synchronized {
-    val content = spark.read.option("wholetext", "true").text(path)
-      .collect().map(_.getString(0)).mkString("\n")
-    val all = content.split("\n", -1).toSeq
-    // Emulate remote `tail -n N`: last N CONTENT lines; the trailing
-    // empty element from a final newline survives the tail (tail's
-    // output still ends with '\n'), exactly like the reference's
-    // split of the tail output (`cassandra_log_analyzer.py:136-137,662`).
-    val lines = tailLines.fold(all) { n =>
-      val (body, trailer) =
-        if (all.nonEmpty && all.last.isEmpty) (all.dropRight(1), Seq(""))
-        else (all, Seq.empty[String])
-      body.takeRight(n) ++ trailer
-    }
-    val key = s"${nodeName}_$logType"
-    storage(key) = linesDf(key, lines)
     invalidate()
     (lines.size.toLong, storage.size)
   }
@@ -121,7 +82,7 @@ final class LogCatalog(val spark: SparkSession) {
 
   /** UNION ALL of every node's raw lines (SURVEY.md §2.7 U1). */
   def raw: DataFrame = synchronized {
-    require(storage.nonEmpty, "no logs loaded — use loadInline/loadFile first")
+    require(storage.nonEmpty, "no logs loaded — use loadContent first")
     storage.values.reduce(_.unionByName(_))
   }
 

@@ -7,7 +7,7 @@ import scala.collection.mutable
 /** Remote log retrieval — the engine's version of the reference's SSH
   * layer (`cassandra_log_analyzer.py:75-167`). This is driver-side
   * INGESTION, not a Spark plan (SURVEY.md §2.1 S1/S5): fetched content
-  * lands in [[LogCatalog.loadInline]]/staging and Spark reads from
+  * lands in [[LogCatalog.loadContent]]/staging and Spark reads from
   * there. At the 100 TB tier logs arrive via object storage and this
   * layer disappears (SURVEY.md §3.3).
   *
@@ -265,23 +265,10 @@ final class RemoteFetcher(
   /** `load_logs_from_all_nodes` — but PARALLEL. The reference awaits
     * nodes one at a time (`cassandra_log_analyzer.py:704-714`, SURVEY
     * §2.10), so a 100-node fetch pays 100 sequential round-trips; here
-    * every node fetches concurrently and results keep the caller's
-    * node order. One node's failure (expected Left OR a thrown
-    * transport exception) never loses the others' results.
-    */
-  def loadAll(catalog: LogCatalog,
-      nodes: Seq[(String, NodeConfig)],
-      logType: String = "system",
-      tailLines: Option[Int] = None,
-      timeout: scala.concurrent.duration.Duration =
-        scala.concurrent.duration.Duration(10, "min"))
-      : Seq[(String, Either[FetchError, (Long, Int)])] =
-    loadAllTypes(catalog, nodes, Seq(logType), tailLines, timeout)
-      .map { case (name, _, res) => name -> res }
-
-  /** Multi-type variant: every (node, type) pair fetches concurrently,
-    * but catalog insertion runs node-major (`node1_system, node1_debug,
-    * node2_system, ...`) — the reference loads types per node inside
+    * every (node, type) pair fetches concurrently and one node's failure
+    * (expected Left OR a thrown transport exception) never loses the
+    * others' results. Catalog insertion runs node-major (`node1_system,
+    * node1_debug, node2_system, ...`) — the reference loads types per node inside
     * its node loop (`cassandra_log_analyzer.py:704-714`), and key
     * insertion order is a load-bearing report-ordering semantic.
     */

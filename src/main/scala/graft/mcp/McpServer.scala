@@ -3,9 +3,11 @@ package graft.mcp
 import java.io.{BufferedReader, InputStream, InputStreamReader, OutputStream, OutputStreamWriter, PrintWriter}
 import java.nio.charset.StandardCharsets.UTF_8
 import scala.collection.mutable
+import scala.util.control.NonFatal
 
 import graft.ingest.{LogCatalog, RemoteFetch, RemoteFetcher}
 import graft.report.Reports
+import graft.util.Errors
 import org.json4s._
 import org.json4s.jackson.JsonMethods.{compact, parse, render}
 
@@ -82,8 +84,25 @@ final class McpDispatcher(val catalog: LogCatalog, fetcher: RemoteFetcher) {
       "text" -> JString(text))))))
   }
 
-  private def callTool(name: String, args: JValue): Either[(Int, String), JValue] = {
-    val text: Either[(Int, String), String] = name match {
+  /** A tool body that throws (an invalid user regex, a missing
+    * `data_dir`, ...) answers `isError: true` with a one-line message
+    * instead of escaping [[McpServer.serve]] and ending the session.
+    */
+  private def callTool(name: String, args: JValue): Either[(Int, String), JValue] =
+    try toolText(name, args).map(reply(_, isError = false))
+    catch {
+      case NonFatal(e) => Right(reply(
+        s"Erreur lors de l'exécution de l'outil '$name': ${Errors.brief(e)}",
+        isError = true))
+    }
+
+  private def reply(text: String, isError: Boolean): JValue = JObject(
+    "content" -> JArray(List(JObject(
+      "type" -> JString("text"), "text" -> JString(text)))),
+    "isError" -> JBool(isError))
+
+  private def toolText(name: String, args: JValue): Either[(Int, String), String] =
+    name match {
       case "configure_ssh_node" => configureSshNode(args)
       case "load_logs_from_ssh" => loadLogsFromSsh(args)
       case "load_logs_from_all_nodes" => loadAllNodes(args)
@@ -93,7 +112,7 @@ final class McpDispatcher(val catalog: LogCatalog, fetcher: RemoteFetcher) {
           content <- req(args, "log_content")
         } yield {
           val logType = str(args, "log_type").getOrElse("system")
-          val (lines, total) = catalog.loadInline(node, content)
+          val (lines, total) = catalog.loadContent(node, content)
           s"Logs $logType chargés pour '$node'\n" +
             s"Nombre de lignes: $lines\nTotal nodes: $total"
         }
@@ -158,11 +177,6 @@ final class McpDispatcher(val catalog: LogCatalog, fetcher: RemoteFetcher) {
           Reports.renderGraphSearch(catalog.spark, d))
       case other => Left((-32602, s"Outil inconnu: $other"))
     }
-    text.map(t => JObject(
-      "content" -> JArray(List(JObject(
-        "type" -> JString("text"), "text" -> JString(t)))),
-      "isError" -> JBool(false)))
-  }
 
   /** `configure_ssh_node` (`cassandra_log_analyzer.py:586-630`): save
     * the config, probe the remote log directory, preview the first
@@ -232,7 +246,7 @@ final class McpDispatcher(val catalog: LogCatalog, fetcher: RemoteFetcher) {
     }
 
   /** `load_logs_from_all_nodes` (`cassandra_log_analyzer.py:691-722`)
-    * — but the fetches run in PARALLEL via [[RemoteFetcher.loadAll]]
+    * — but the fetches run in PARALLEL via [[RemoteFetcher.loadAllTypes]]
     * where the reference awaits nodes one at a time.
     */
   private def loadAllNodes(args: JValue): Either[(Int, String), String] =
@@ -432,14 +446,7 @@ object McpServer {
     * node's configured credentials ([[RemoteFetch.defaultRunner]]).
     */
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[*]"))
-      .appName("cassandra-log-analyzer")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession()
     spark.sparkContext.setLogLevel("ERROR")
     val fetcher = new RemoteFetcher(RemoteFetch.defaultRunner)
     serve(System.in, System.out,

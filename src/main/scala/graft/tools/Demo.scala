@@ -1,9 +1,8 @@
 package graft.tools
 
-import graft.ingest.LogCatalog
+import graft.ingest.{LogCatalog, RemoteFetch, RemoteFetcher}
 import graft.query.LogQueries
 import graft.report.Reports
-import org.apache.spark.sql.SparkSession
 
 /** Runnable end-to-end demo of the analytics surface — the engine-side
   * equivalents of the reference's MCP tools over an inline corpus.
@@ -11,19 +10,10 @@ import org.apache.spark.sql.SparkSession
   */
 object Demo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-demo")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession()
 
     val catalog = new LogCatalog(spark)
-    val (lines1, nodes1) = catalog.loadInline("node1_system",
+    val (lines1, nodes1) = catalog.loadContent("node1_system",
       Seq(
         "INFO  [2026-05-14 10:00:00,001] [main] o.a.c.Service:100 - Startup complete",
         "ERROR [2026-05-14 10:00:01,002] [ReadStage-2] o.a.c.db.ReadCommand:512 - Read timed out after 5000ms",
@@ -33,11 +23,17 @@ object Demo {
       ).mkString("\n") + "\n")
     println(s"== load_logs: $lines1 lignes, $nodes1 nodes")
 
+    // a local file through the fetcher's source-side `tail -n`, the
+    // same path `load_logs_from_ssh` takes for a localhost node
     args.headOption.foreach { path =>
-      if (new java.io.File(path).exists()) {
-        val (n, total) = catalog.loadFile("node2", "system", path, tailLines = Some(3))
-        println(s"== load from file (tail -n 3): $n lignes, $total node keys")
-      } else println(s"== [skip] log file not found: $path")
+      val fetcher = new RemoteFetcher(_ => new RemoteFetch.LocalShellRunner)
+      fetcher.readLogFile(RemoteFetch.NodeConfig("localhost", "demo"), path,
+          tailLines = Some(3)) match {
+        case Right(content) =>
+          val (n, total) = catalog.loadContent("node2_system", content)
+          println(s"== load from file (tail -n 3): $n lignes, $total node keys")
+        case Left(err) => println(s"== [skip] ${err.message}")
+      }
     }
 
     println("\n==== analyze_cluster ====")

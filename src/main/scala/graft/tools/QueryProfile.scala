@@ -1,37 +1,33 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
-/** Scratch per-query profiler (not part of the driver contract; run
-  * manually while optimizing): executes named SparkEntry queries with
-  * the bench's session shape and reports wall seconds, Spark JOB and
-  * stage counts, and executor task seconds. The job count is the
-  * load-bearing number for the eager gates (lake maintenance,
+/** The per-query profiler (not part of the Bench/Verify contract; run
+  * manually while optimizing): executes named SparkEntry queries in the
+  * [[graft.GraftSession]] session Bench times and reports wall seconds,
+  * Spark JOB and stage counts, and executor task seconds. The job count
+  * is the load-bearing number for the eager gates (lake maintenance,
   * streaming foreachBatch): their work is dozens of tiny driver-issued
-  * jobs that `.explain` on the returned frame cannot show.
+  * jobs that `.explain` on the returned frame cannot show. `k=v`
+  * arguments override session confs for an A/B at identical code.
   *
-  * Usage: `runMain graft.tools.QueryProfile <sfDir> <q1,q2,...>`
+  * Usage: `runMain graft.tools.QueryProfile <sfDir> [q1,q2,...] [k=v ...]`,
+  * e.g. the graph-ANN build family: `q304_knn_diversify,
+  * q305_graph_search_diversified,q315_delta_knn_diversify,
+  * q327_delete_knn_diversify,q316_hnsw_ladder_structured`.
   */
 object QueryProfile {
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val names = args.lift(1).map(_.split(',').toSeq)
+    val (confs, rest) = args.partition(_.contains("="))
+    require(rest.nonEmpty, "usage: QueryProfile <sfDir> [q1,q2,...] [k=v ...]")
+    val sfDir = rest.head
+    val names = rest.lift(1).map(_.split(',').toSeq)
       .getOrElse(Seq("q316_hnsw_ladder_structured"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        "false")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession()
+    confs.foreach { kv =>
+      val Array(k, v) = kv.split("=", 2)
+      spark.conf.set(k, v)
+    }
 
     @volatile var jobs = 0
     @volatile var stages = 0
@@ -48,7 +44,8 @@ object QueryProfile {
       spark.sparkContext.setJobDescription(name)
       jobs = 0; stages = 0; taskMs = 0L
       val t0 = System.nanoTime()
-      SparkEntryRun.exec(spark, sfDir, name)
+      graft.SparkEntry.queries(name)(spark, sfDir)
+        .queryExecution.toRdd.foreach(_ => ())
       val wall = (System.nanoTime() - t0) / 1e9
       // listener events drain asynchronously; settle before reading
       Thread.sleep(300)
@@ -59,11 +56,5 @@ object QueryProfile {
     // one warm pass (codegen compile) then the measured pass, per query
     names.foreach { n => run(n); run(n) }
     spark.stop()
-  }
-
-  private object SparkEntryRun {
-    def exec(s: SparkSession, dir: String, name: String): Unit =
-      graft.SparkEntry.queries(name)(s, dir)
-        .queryExecution.toRdd.foreach(_ => ())
   }
 }

@@ -47,16 +47,16 @@ class GoldenCorpusSpec extends SparkSuite {
 
   private lazy val catalog: LogCatalog = {
     val c = new LogCatalog(spark)
-    c.loadInline("node1_system", node1Content)
-    c.loadInline("node2_system", node2Content)
+    c.loadContent("node1_system", node1Content)
+    c.loadContent("node2_system", node2Content)
     c
   }
 
-  test("loadInline reports Python split('\\n') line counts") {
+  test("loadContent reports Python split('\\n') line counts") {
     val c = new LogCatalog(spark)
-    val (n1, total1) = c.loadInline("a", "x\ny\n") // x, y, ""
+    val (n1, total1) = c.loadContent("a", "x\ny\n") // x, y, ""
     assert(n1 == 3 && total1 == 1)
-    val (n2, total2) = c.loadInline("b", "x")
+    val (n2, total2) = c.loadContent("b", "x")
     assert(n2 == 1 && total2 == 2)
   }
 
@@ -97,7 +97,7 @@ class GoldenCorpusSpec extends SparkSuite {
 
   test("below-threshold corpus yields no recommendations") {
     val c = new LogCatalog(spark)
-    c.loadInline("n", s"ERROR [${ts(1)}] [m] C:1 - Read timed out\n")
+    c.loadContent("n", s"ERROR [${ts(1)}] [m] C:1 - Read timed out\n")
     assert(ClusterAnalyzer.recommendations(
       ClusterAnalyzer.issueHistogram(c.classified)).isEmpty)
   }
@@ -146,9 +146,9 @@ class GoldenCorpusSpec extends SparkSuite {
   test("distinct base-node count strips the _suffix (CLA:678)") {
     assert(catalog.distinctBaseNodes == 2L)
     val c = new LogCatalog(spark)
-    c.loadInline("n1_system", "x")
-    c.loadInline("n1_debug", "x")
-    c.loadInline("solo", "x")
+    c.loadContent("n1_system", "x")
+    c.loadContent("n1_debug", "x")
+    c.loadContent("solo", "x")
     assert(c.distinctBaseNodes == 2L) // n1 + solo
   }
 

@@ -252,6 +252,22 @@ class McpServerSpec extends SparkSuite {
     assert((unknown \ "id") === JInt(7))
   }
 
+  test("a failing tool answers isError and the serve loop keeps answering") {
+    val d = newDispatcher
+    val Seq(_, bad, report) = roundTrip(d,
+      s"""{"jsonrpc":"2.0","id":1,"method":"tools/call","params":{"name":"load_logs","arguments":{"node_name":"node1","log_content":"ERROR [2024-01-01 10:00:01,000] [ReadStage-2] o.a.c.db.ReadCommand:512 - Connection timeout detected"}}}""",
+      """{"jsonrpc":"2.0","id":2,"method":"tools/call","params":{"name":"search_logs","arguments":{"pattern":"(unclosed"}}}""",
+      """{"jsonrpc":"2.0","id":3,"method":"tools/call","params":{"name":"analyze_cluster","arguments":{}}}""")
+    assert((bad \ "id") === JInt(2))
+    assert((bad \ "result" \ "isError") === JBool(true))
+    val msg = resultText(bad)
+    assert(msg.startsWith("Erreur lors de l'exécution de l'outil 'search_logs': " +
+      "PatternSyntaxException: Unclosed group"))
+    assert(!msg.contains("\n")) // one line, no stack trace
+    assert((report \ "result" \ "isError") === JBool(false))
+    assert(resultText(report).contains("Erreurs: 1"))
+  }
+
   test("ssh runner rejects option-shaped destinations (argv injection)") {
     intercept[IllegalArgumentException] {
       new RemoteFetch.SshProcessRunner("host", "-oProxyCommand=evil")

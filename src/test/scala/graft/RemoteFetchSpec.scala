@@ -111,14 +111,15 @@ class RemoteFetchSpec extends SparkSuite {
       .isInstanceOf[SshProcessRunner])
   }
 
-  test("loadAll fetches concurrently but keeps caller node order; bad nodes error per-node") {
+  test("loadAllTypes fetches concurrently but keeps caller node order; bad nodes error per-node") {
     val catalog = new LogCatalog(spark)
     val nodes = Seq(
       "nodeB" -> cfg,
       "nodeA" -> cfg,
       "ghost" -> cfg.copy(logDirectory = "/no/such/dir"),
       "nodeC" -> cfg)
-    val results = fetcher.loadAll(catalog, nodes, "system", Some(3))
+    val results = fetcher.loadAllTypes(catalog, nodes, Seq("system"), Some(3))
+      .map { case (name, _, res) => name -> res }
     assert(results.map(_._1) === Seq("nodeB", "nodeA", "ghost", "nodeC"))
     // catalog insertion order == caller order (reference dict-order
     // semantics), with the failed node absent
